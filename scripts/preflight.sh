@@ -8,8 +8,8 @@
 # commit:
 #   bash scripts/preflight.sh
 #
-# Exit 0 = compile green AND every registered oracle query hash-green
-# at sf0.001. Anything else = do not snapshot; fix first.
+# Exit 0 = compile green, graft.Probe runs, AND every registered oracle
+# query hash-green at sf0.001. Anything else = do not snapshot; fix first.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -28,6 +28,16 @@ SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-8}" \
   >/tmp/preflight_verify.log 2>&1 || {
   echo "[preflight] VERIFY FAILED — tail of log:"
   tail -30 /tmp/preflight_verify.log
+  exit 1
+}
+
+# the one measurement probe stays runnable: a failed rep exits non-zero
+echo "[preflight] graft.Probe @ sf0.001..."
+sbt -batch "runMain graft.Probe --reps 1 --stages --explain \
+    --queries q01_pricing_summary /root/testdata/sf0.001" \
+  >/tmp/preflight_probe.log 2>&1 || {
+  echo "[preflight] PROBE FAILED — tail of log:"
+  tail -30 /tmp/preflight_probe.log
   exit 1
 }
 

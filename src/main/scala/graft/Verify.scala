@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -14,23 +13,12 @@ object Verify {
         name => ps.exists(name.startsWith)
       case None => _ => true
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     // production parity: the gate runs with the SQL-function registry
-    // and the BinnedIntervalJoin optimizer rule installed, as a
-    // cluster session built with spark.sql.extensions would be
-    GraftExtensions.register(spark)
-    // reliable-checkpoint dir: qd09's connected components (and any
-    // other iterative op) runs its production fault-tolerant path in
-    // the gate rather than the localCheckpoint fallback
-    spark.sparkContext.setCheckpointDir(
-      Files.createTempDirectory("graft_ckpt").toString)
+    // and the optimizer rules installed, as a cluster session built
+    // with spark.sql.extensions would be, and with a reliable
+    // checkpoint dir, so qd09's connected components runs its
+    // fault-tolerant path rather than the localCheckpoint fallback
+    val spark = GraftSession.local("graft-verify")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.foreach { case (name, fn) =>
       if (keep(name))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 
 /** Typed assignment pass for the deterministic ppm-integer k-means
-  * (qs07/qs08 and their ScaleProbe rings).
+  * (qs07/qs08; SCALE.md "k-means refinement at 10k-1M vectors").
   *
   * The declarative form — per centroid an `aggregate(zip_with(v, c,
   * (a,b) => (a-b)*(a-b)), 0L, _+_)` fold, then `array_min` +

@@ -34,7 +34,8 @@ final class KmvBuffer(val k: Int) {
   *
   * Deterministic by construction (a set minimum is order-free), so the
   * sketch path and qd13's exact-window path agree on the k-th hash
-  * bit-for-bit — asserted in `KmvSketchSpec`, measured in ScaleProbe.
+  * bit-for-bit — asserted in `KmvSketchSpec`, measured in SCALE.md
+  * ("Corpus analytics at documents ×{1, 20, 100}").
   */
 case class KmvAgg(
     child: Expression,

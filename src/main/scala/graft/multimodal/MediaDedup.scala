@@ -335,7 +335,8 @@ object MediaDedup {
     * the single join would fan out beyond what one representative per
     * class costs — exceeds the collapse machinery's fixed overhead
     * (~6 extra serial AQE stages + passes over the hash relation).
-    * Measured A/B (MediaGateProbe, SCALE.md): at sf0.1 mm28's
+    * Measured A/B (SCALE.md, "mm27/mm29 identical-class quadratic"
+    * and "mm31 radar stamp"): at sf0.1 mm28's
     * fan-out-11 classes save only ~0.7 M rows and single join is 2×
     * FASTER (1.86 vs 3.84 s); mm27 at sf1 saves ~23 M and single
     * still wins (3.9 vs 6.0 s); mm27/mm29 at sf10 save ~2.7 G rows
@@ -413,14 +414,6 @@ object MediaDedup {
         col("bk.media_id").as("b_id"), col("bk.take").as("b_take"),
         col("shared"), col("union_n"), col("jaccard_ppm"))
   }
-
-  /** Probe hooks (MediaGateProbe): both arms over an already-staged
-    * relation, for the A/B that evidences the fan-out gate constant. */
-  private[graft] def probePairsSingle(sigs: DataFrame,
-      thresholdPpm: Long): DataFrame = pairsFromSigs(sigs, thresholdPpm)
-  private[graft] def probePairsCollapsed(sigs: DataFrame,
-      thresholdPpm: Long): DataFrame =
-    pairsMaybeCollapsed(sigs, thresholdPpm, collapseGate = -1.0)
 
   def shingleNearDup(media: DataFrame, stageDir: String,
       fingerprint: Array[Byte] => IndexedSeq[String],

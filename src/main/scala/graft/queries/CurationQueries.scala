@@ -101,18 +101,6 @@ object CurationQueries extends QueryRegistry {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
   }
 
-  /** Probe hook (Qd25Probe --cold-cache): drop + unpersist this
-    * session's exploded-shingle relations so a rep pays the cold
-    * persist build, isolating its share of first-rep wall. */
-  private[graft] def clearExplodedCache(s: SparkSession): Unit =
-    explodedCache.synchronized {
-      val m = explodedCache.remove(s)
-      if (m != null) m.values().forEach { df =>
-        try df.unpersist(blocking = true): Unit
-        catch { case _: Exception => () }
-      }
-    }
-
   /** Core of qd11 over any exploded (doc_id, sh) frame — shared with
     * the scale probe. */
   private[graft] def decontamFrom(sh: DataFrame): DataFrame = {
@@ -1179,8 +1167,9 @@ object CurationQueries extends QueryRegistry {
   }
 
   /** Query-path body — (rank, doc_id, score) for a (doc_id, score)
-    * frame — reused by ScaleProbe's A/B against the naive global
-    * window. Unsorted: the gate adds the presentation orderBy.
+    * frame — measured against the naive global window in SCALE.md
+    * ("Global ranking"). Unsorted: the gate adds the presentation
+    * orderBy.
     *
     * Bins are an EXPLICIT deterministic function of the row: boundaries
     * come from one eager approxQuantile pass collected to nParts-1
@@ -1201,7 +1190,7 @@ object CurationQueries extends QueryRegistry {
     * the price of removing the correctness-by-plan-shape dependency —
     * callers exporting from a hot cache can persist `scored` first to
     * collapse the extra column reads. */
-  private[graft] def curriculumOf(
+  private def curriculumOf(
       scored: DataFrame, nParts: Int): DataFrame = {
     import scored.sparkSession.implicits._
     val probs = (1 until nParts).map(_.toDouble / nParts).toArray
@@ -1448,8 +1437,8 @@ object CurationQueries extends QueryRegistry {
     * sequential semantics CurateStage documents — so a drift in any
     * stage's decision for any single document shifts a sum. Bench
     * note: this is deliberately the heaviest gate row (~6 s at
-    * sf0.1); CurationProbe's stage attribution puts 85% of it in the
-    * near-dup stage (LSH + exact Jaccard + checkpointed CC — the
+    * sf0.1); SCALE.md's "qc07 funnel stage attribution" puts 85% of
+    * it in the near-dup stage (LSH + exact Jaccard + checkpointed CC — the
     * transitive correctness the funnel exists for), adjudicated as an
     * explained floor in SCALE.md, sub-linear at sf1. The stats
     * row is a bounded 1-row collect; the stage's internal caches are

@@ -542,9 +542,9 @@ object DedupQueries extends QueryRegistry {
       }
     }
 
-  /** `private[graft]` so Qd26Probe can phase-attribute over the SAME
-    * memoized relation the query's five consumers share. */
-  private[graft] def cachedShingleRelation(docs: DataFrame): DataFrame = {
+  /** The memoized relation the query's five consumers share (phase
+    * attribution in SCALE.md, "qd26 decade-curve root cause"). */
+  private def cachedShingleRelation(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
     cachedRelation(docs, "sh")(docs.select($"doc_id",
       explode(hashedShingles(words($"text"))).as("sh")))
@@ -1282,9 +1282,9 @@ object DedupQueries extends QueryRegistry {
     * (joinable md5 of the empty string) where SQL's array_to_string
     * yields NULL (never joins) — the explicit null gate keeps both
     * engines on SQL semantics: a null text has no fingerprint and can
-    * never be anyone's duplicate. `private[graft]` so BloomProbe
-    * derives its unpruned baseline from the same key. */
-  private[graft] def prefixFingerprint(text: Column, n: Int): Column =
+    * never be anyone's duplicate. The pruned-vs-unpruned A/B over this
+    * key is in SCALE.md ("qd28 broadcast-Bloom incremental dedup"). */
+  private def prefixFingerprint(text: Column, n: Int): Column =
     when(text.isNotNull,
       md5(to_binary(concat_ws(" ", slice(split(lower(text), " "), 1, n)),
         lit("utf-8"))))
@@ -1677,8 +1677,8 @@ object DedupQueries extends QueryRegistry {
   private def kmvDistinct(s: SparkSession, dir: String): DataFrame =
     kmvDistinctOf(Tables(s, dir).documents)
 
-  /** The (source, 60-bit bigram hash) projection shared by the gate
-    * query and ScaleProbe's sketch-vs-exact comparison. */
+  /** The (source, 60-bit bigram hash) projection of the gate query;
+    * SCALE.md's "Corpus analytics" compares sketch vs exact over it. */
   private[graft] def bigramHashes(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
     val base = docs.select($"source", words($"text").as("ws"))
@@ -1692,8 +1692,9 @@ object DedupQueries extends QueryRegistry {
           16, 10).cast("long").as("h"))
   }
 
-  /** Query-path body, reused by `ScaleProbe` on replicated frames. */
-  private[graft] def kmvDistinctOf(docs: DataFrame): DataFrame = {
+  /** Query-path body; replicated-frame numbers in SCALE.md ("Corpus
+    * analytics at documents ×{1, 20, 100}"). */
+  private def kmvDistinctOf(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
     import org.apache.spark.sql.expressions.Window
     val hashed = bigramHashes(docs).distinct()
@@ -1944,8 +1945,8 @@ object DedupQueries extends QueryRegistry {
   private def cdcChunks(s: SparkSession, dir: String): DataFrame =
     cdcStatsOf(Tables(s, dir).documents)
 
-  /** Query-path body over any (source, text) frame — reused by
-    * ScaleProbe so the scale evidence measures THIS plan. The chunk
+  /** Query-path body over any (source, text) frame — the plan SCALE.md
+    * ("CDC chunking") measured on replicated frames. The chunk
     * pass is the [[graft.functions.Cdc]] mapPartitions kernel (one
     * MessageDigest, one pass) — CdcSpec asserts it equals
     * [[cdcStatsDeclarativeOf]] value-for-value, and the DuckDB oracle

@@ -313,21 +313,6 @@ object EventQueries extends QueryRegistry {
       .select($"user_id", $"click_ts", $"purchase_ts")
   }
 
-  /** The naive plan qe08 replaces: equi-join on user_id alone, window
-    * predicate as a post-filter — per-user cross product (probe-only). */
-  private[graft] def intervalNaiveFrom(ev: DataFrame): DataFrame = {
-    import ev.sparkSession.implicits._
-    val clicks = ev.filter($"event_type" === "click")
-      .select($"user_id", $"ts".as("click_ts"))
-    val purchases = ev.filter($"event_type" === "purchase")
-      .select($"user_id".as("p_user"), $"ts".as("purchase_ts"))
-    clicks.join(purchases,
-      clicks("user_id") === purchases("p_user") &&
-        $"purchase_ts" > $"click_ts" &&
-        $"purchase_ts" <= $"click_ts" + expr("INTERVAL 1 HOUR"))
-      .select($"user_id", $"click_ts", $"purchase_ts")
-  }
-
   private[graft] val intervalBinJoinSql =
     """SELECT c.user_id, c.ts AS click_ts, p.ts AS purchase_ts
       |FROM events c JOIN events p

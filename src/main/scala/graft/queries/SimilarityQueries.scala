@@ -504,10 +504,10 @@ object SimilarityQueries extends QueryRegistry {
   private def kmeansRefine(s: SparkSession, dir: String): DataFrame =
     kmeansRefineOf(Tables(s, dir).embeddings)
 
-  /** Query-path body over any (vec_id, embedding float[]) frame —
-    * reused verbatim by ScaleProbe so the scale evidence measures THIS
-    * plan, not a probe fork. */
-  private[graft] def kmeansRefineOf(emb: DataFrame): DataFrame = {
+  /** Query-path body over any (vec_id, embedding float[]) frame — the
+    * plan SCALE.md ("k-means refinement at 10k-1M vectors") measured,
+    * not a probe fork. */
+  private def kmeansRefineOf(emb: DataFrame): DataFrame = {
     val s = emb.sparkSession
     import s.implicits._
     val (fin, cents) = kmeansAssignOf(emb)

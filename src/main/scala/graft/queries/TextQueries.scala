@@ -509,8 +509,8 @@ object TextQueries extends QueryRegistry {
   private def lmScore(s: SparkSession, dir: String): DataFrame =
     lmScoreOf(Tables(s, dir).documents)
 
-  /** Query-path body, reused verbatim by `ScaleProbe` on replicated
-    * frames so the scale evidence measures THIS plan, not a probe fork.
+  /** Query-path body — the plan SCALE.md ("Corpus analytics at
+    * documents ×{1, 20, 100}") measured on replicated frames.
     *
     * `saltHotWords > 0` opts into the detect-then-salt mitigation for
     * the Zipf-hot (w1[,w2]) join keys: one bounded-state Misra-Gries
@@ -519,9 +519,10 @@ object TextQueries extends QueryRegistry {
     * `saltHotWords` salts while their count-table rows replicate to
     * match (cold keys join plainly at salt 0). Values are identical —
     * salting only reroutes rows — so the gate keeps the default path
-    * and the A/B lives in ScaleProbe/SCALE.md. On a real cluster AQE's
-    * skew split is the zero-code alternative once hot partitions cross
-    * its size threshold; explicit salting is for when they don't
+    * and the A/B lives in SCALE.md ("Corpus analytics"). On a real
+    * cluster AQE's skew split is the zero-code alternative once hot
+    * partitions cross its size threshold; explicit salting is for when
+    * they don't
     * (compressed small rows) or AQE is off (streaming). */
   private[graft] def lmScoreOf(
       docs: DataFrame, saltHotWords: Int = 0): DataFrame = {
@@ -530,7 +531,7 @@ object TextQueries extends QueryRegistry {
     // size guard: Spark sequence(1, 0) counts DOWN ([1,0]) instead of
     // returning empty like DuckDB generate_series — skip 1-word docs
     // occurrence-level joins, MEASURED faster than the pre-aggregated
-    // per-doc-type alternative at fixture ×1 and ×100 both (ScaleProbe:
+    // per-doc-type alternative at fixture ×1 and ×100 both (SCALE.md:
     // 9.1 s vs 15.2 s at 500k docs — per-doc bigram repetition is too
     // low for an extra combine shuffle to pay for itself). The (w1,w2)
     // join keys are Zipf-hot by nature; that's the AQE-skew-split case,
