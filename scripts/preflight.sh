@@ -31,10 +31,13 @@ SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-8}" \
   exit 1
 }
 
-# the one measurement probe stays runnable: a failed rep exits non-zero
+# the one measurement probe stays runnable: a failed rep exits non-zero.
+# Two reps of the staged-shingle queries run the per-call staging path
+# twice in one JVM.
 echo "[preflight] graft.Probe @ sf0.001..."
-sbt -batch "runMain graft.Probe --reps 1 --stages --explain \
-    --queries q01_pricing_summary /root/testdata/sf0.001" \
+sbt -batch "runMain graft.Probe --reps 2 --stages --explain \
+    --queries q01_pricing_summary,qd26_containment_capped,qc07_curate_funnel \
+    /root/testdata/sf0.001" \
   >/tmp/preflight_probe.log 2>&1 || {
   echo "[preflight] PROBE FAILED — tail of log:"
   tail -30 /tmp/preflight_probe.log

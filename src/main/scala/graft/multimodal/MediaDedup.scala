@@ -135,41 +135,20 @@ object MediaDedup {
     * `(media_id, take, partner_id, partner_take, is_dup)`. */
   def compactVerdicts(verdicts: DataFrame, staged: DataFrame,
       thresholdPpm: Long = 400000L): DataFrame = {
-    // Candidate (item, owner) pairs are few — one per foreign shingle
-    // bucket — but r17's owner prefilter referenced them unpersisted,
-    // duplicating the verdict-distinct subtree into the plan (the
-    // qd26-class defect). localCheckpoint: the derivation executes
-    // once; both prefilters, and the verify join, read the
-    // materialized pairs (size-known, so AQE broadcasts the key sets).
+    // candidate (item, owner) pairs are few — one per foreign shingle
+    // bucket; SharedCount checkpoints them and semi-filters both sides
+    // of the staged relation to candidate keys
+    val keys = Seq("media_id", "take")
     val cand = verdicts
       .where(col("media_id") =!= col("owner_id") ||
         col("take") =!= col("owner_take"))
       .select(col("media_id"), col("take"),
         col("owner_id"), col("owner_take"))
       .distinct()
-      .localCheckpoint()
-    // guide §3.2, BOTH sides (r17 did the owner side only; the item
-    // side still shuffled the whole staged relation although only
-    // candidate items can match). Result-identical: a semi join only
-    // removes rows with no partner.
-    val itemKeys = cand.select(col("media_id"), col("take")).distinct()
-    val a = staged.join(itemKeys, Seq("media_id", "take"), "left_semi")
-      .select(col("media_id"), col("take"), col("sh"),
-        col("n_sh").as("a_n"))
-    val owners = cand.select(col("owner_id"), col("owner_take"))
-      .distinct()
-    val b = staged.join(owners,
-        staged("media_id") === owners("owner_id") &&
-          staged("take") === owners("owner_take"), "left_semi")
-      .select(col("media_id").as("owner_id"),
-        col("take").as("owner_take"), col("sh"), col("n_sh").as("b_n"))
-    val qualified = cand
-      .join(a, Seq("media_id", "take"))
-      .join(b, Seq("owner_id", "owner_take", "sh"))
-      .groupBy(col("media_id"), col("take"),
-        col("owner_id"), col("owner_take"))
-      .agg(count(lit(1)).as("shared"),
-        max(col("a_n")).as("a_n"), max(col("b_n")).as("b_n"))
+    val sizes = staged.groupBy(keys.map(col): _*)
+      .agg(max(col("n_sh")).as("n_sh"))
+    val qualified = graft.functions.SharedCount(cand, keys,
+        Seq("owner_id", "owner_take"), staged, sizes, keys)
       .where(floor(lit(1000000L) * col("shared") /
         (col("a_n") + col("b_n") - col("shared"))) >= thresholdPpm)
       .groupBy(col("media_id"), col("take"))

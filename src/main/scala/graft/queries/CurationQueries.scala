@@ -74,32 +74,17 @@ object CurationQueries extends QueryRegistry {
        |      FROM documents) w""".stripMargin
   }
 
-  /** Exploded (doc_id, sh) via the single-pass JVM kernel, persisted
-    * and memoized per (session, sf dir): qd11 and qd12 each traverse
-    * the frame twice (eval/train split; df-agg + join-back), and
-    * without a persist each traversal re-scans and re-hashes the whole
-    * corpus. Bounded: one cached frame per fixture dir per session
-    * (MEMORY_AND_DISK, spills). At 100 TB the same two-pass reuse is a
-    * reliable checkpoint rather than a cache — plan shape unchanged. */
-  // WeakHashMap on the session: a stopped session's entries become
-  // collectable (no leak across stop/start cycles), and distinct live
-  // sessions can never collide the way a hash-derived key could
-  private val explodedCache = new java.util.WeakHashMap[
-    SparkSession, java.util.concurrent.ConcurrentHashMap[String, DataFrame]]()
-  private def exploded(s: SparkSession, dir: String): DataFrame = {
-    val perSession = explodedCache.synchronized {
-      var m = explodedCache.get(s)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-        explodedCache.put(s, m)
-      }
-      m
-    }
-    perSession.computeIfAbsent(dir, _ =>
-      graft.functions.ShingleHash.exploded(
-        Tables(s, dir).documents.select(col("doc_id"), col("text")), GramK)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-  }
+  /** Exploded (doc_id, sh) via the single-pass JVM kernel, staged
+    * (`localCheckpoint`) once per call: qd11 and qd12 each traverse
+    * the frame twice (eval/train split; df-agg + join-back), and st06
+    * re-reads its static side every micro-batch, so an unstaged frame
+    * would re-scan and re-hash the whole corpus per traversal. At
+    * 100 TB the same reuse is a reliable checkpoint — plan shape
+    * unchanged. */
+  private def exploded(s: SparkSession, dir: String): DataFrame =
+    graft.functions.ShingleHash.exploded(
+      Tables(s, dir).documents.select(col("doc_id"), col("text")), GramK)
+      .localCheckpoint()
 
   /** Core of qd11 over any exploded (doc_id, sh) frame — shared with
     * the scale probe. */
@@ -217,9 +202,8 @@ object CurationQueries extends QueryRegistry {
   /** qd21: duplicated-span SCRUB — the removal operator for the signal
     * qd12 measures. Production positional grams come from the
     * [[graft.functions.ShingleHash.positional]] kernel (one narrow
-    * pass, like [[exploded]]); the dup set reuses the memoized
-    * distinct frame, so the corpus is shingled once for qd11/qd12/qd21
-    * together. */
+    * pass, like [[exploded]]); the dup set reads the staged distinct
+    * frame. */
   private def spanScrub(s: SparkSession, dir: String): DataFrame = {
     val sh = exploded(s, dir)
     val dup = sh.groupBy(col("sh"))
@@ -803,7 +787,7 @@ object CurationQueries extends QueryRegistry {
     val src = s.readStream.schema(docsSchema).parquet(stage)
       .select(col("doc_id"), col("text"))
     val sh = graft.functions.ShingleHash.exploded(src, GramK)
-    // static side: the memoized batch gram frame (tiny, broadcast)
+    // static side: the staged batch gram frame (tiny, broadcast)
     val evalGrams = exploded(s, dir)
       .filter(col("doc_id") % EvalMod === 0)
       .select(col("sh")).distinct()

@@ -206,6 +206,22 @@ class CurateStageSpec extends SparkSpec {
         softDedup = true, containmentTau = Some(0.6))))
   }
 
+  test("close() leaves no cached relation behind with the near-dup and " +
+    "containment stages on") {
+    // the shingle relations both dedup stages reuse are staged per
+    // call, never persisted into the session's CacheManager — after
+    // close() nothing from the run may remain cached
+    spark.catalog.clearCache()
+    val res = CurateStage.run(
+      docsDf().select(col("doc_id"), col("text"), col("lang")),
+      CurateStage.CurateOptions(
+        nearDupJaccard = Some(0.5), containmentTau = Some(0.6)))
+    try assert(res.curated.count() > 0L)
+    finally res.close()
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "a cached relation outlived CurateResult.close()")
+  }
+
   test("span scrub cuts a cross-doc duplicated run from BOTH docs, " +
     "preserves casing, leaves unique docs verbatim; off by default") {
     import spark.implicits._
